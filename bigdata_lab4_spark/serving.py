@@ -22,19 +22,25 @@ The reference's ``/vault-status/`` route reports its secrets
 backend; there is no secrets backend here (configuration is plain
 constructor arguments), so the route is intentionally absent.
 
-Scale notes: serving is a *driver-side* concern. ``predict_one``
-scores against the broadcast-sized local parameter copy (O(classes ×
-max_features) floats) — no Spark job per request, so request latency
-is microseconds of Python, not a cluster round-trip. Only the audit
-trail touches storage: the per-request parquet append mirrors the
-reference's per-request ClickHouse insert; a high-QPS deployment
-replaces it with the micro-batching streaming sink
-(:mod:`bigdata_lab4_spark.streaming`).
+Scale notes: serving is a *driver-side* concern, and ``/predict``
+runs no Spark job. ``predict_one`` scores against the
+broadcast-sized local parameter copy (O(classes × max_features)
+floats), so scoring is microseconds of Python, not a cluster
+round-trip. The audit trail mirrors the reference's per-request
+ClickHouse insert as one driver-side parquet file write per request
+(:func:`~bigdata_lab4_spark.engine.insert_prediction`), tens of
+milliseconds. A high-QPS deployment batches its appends through the
+micro-batching streaming sink (:mod:`bigdata_lab4_spark.streaming`)
+instead. A failed audit write still answers 200, as in the
+reference, but is logged as a warning and counted in
+``SentimentAPI.audit_failures``. Only ``/predictions`` runs a Spark
+job: a top-k read of the store.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -42,6 +48,8 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 
 from bigdata_lab4_spark.engine import insert_prediction, top_k_predictions
+
+logger = logging.getLogger(__name__)
 
 
 class SentimentAPI:
@@ -52,6 +60,9 @@ class SentimentAPI:
     ``database_connected: false``, ``/predictions/`` returns 503) —
     the reference behaves the same when ClickHouse is unreachable
     (`src/app.py:62-65`: "Continuing without database support").
+
+    ``audit_failures`` counts ``/predict`` calls whose prediction was
+    answered but whose audit row could not be written.
     """
 
     def __init__(
@@ -63,6 +74,8 @@ class SentimentAPI:
         self.spark = spark
         self.model = model
         self.predictions_path = predictions_path
+        self.audit_failures = 0
+        self._audit_lock = threading.Lock()
 
     # -- route bodies (transport-free, unit-testable) ------------------
 
@@ -71,11 +84,17 @@ class SentimentAPI:
         if self.predictions_path is not None:
             # best-effort audit append, like the reference's guarded
             # insert (`src/app.py:74-79`): a store failure must not
-            # fail the prediction response
+            # fail the prediction response, but it must show
             try:
                 insert_prediction(self.spark, message, result, self.predictions_path)
             except Exception:
-                pass
+                with self._audit_lock:
+                    self.audit_failures += 1
+                logger.warning(
+                    "audit insert into %s failed; prediction still served",
+                    self.predictions_path,
+                    exc_info=True,
+                )
         return result
 
     def predictions(self, limit: int = 10) -> list[dict]:

@@ -5,6 +5,9 @@ contract (`/root/reference/src/app.py:67-138`)."""
 from __future__ import annotations
 
 import json
+import logging
+import sys
+import threading
 import urllib.request
 
 import pytest
@@ -118,3 +121,63 @@ def test_invalid_limit_422_payloads_distinguish_type_and_range(served):
     assert code == 422
     assert out["detail"][0]["type"] == "value_error.number.not_ge"
     assert "greater than or equal" in out["detail"][0]["msg"]
+
+
+def test_audit_failure_still_answers_and_is_counted(spark, tiny_model, tmp_path, caplog):
+    """A store that cannot be written does not fail ``/predict`` (the
+    reference answers 200 too), but the failure is logged and counted
+    instead of being swallowed."""
+    not_a_dir = tmp_path / "preds"
+    not_a_dir.write_text("a regular file, not a parquet directory")
+    api = SentimentAPI(spark, tiny_model, predictions_path=str(not_a_dir))
+    server, _ = api.start_background()
+    try:
+        with caplog.at_level(logging.WARNING, logger="bigdata_lab4_spark.serving"):
+            code, out = _call(server.server_address[1], "POST", "/predict/", {"message": "great happy"})
+    finally:
+        server.shutdown()
+    assert code == 200 and out == {"sentiment": POSITIVE}
+    assert api.audit_failures == 1
+    warnings = [r for r in caplog.records if r.name == "bigdata_lab4_spark.serving"]
+    assert len(warnings) == 1 and warnings[0].levelno == logging.WARNING
+
+
+def test_concurrent_predicts_lose_no_audit_rows(spark, tiny_model, tmp_path):
+    """4 clients x 25 ``/predict`` calls against one store keep every
+    row. Each audit row is its own uniquely named file, so concurrent
+    inserts share no state; the earlier Spark ``append`` write raced
+    on the table's shared ``_temporary/0`` commit directory and lost
+    acknowledged rows."""
+    store = str(tmp_path / "preds")
+    api = SentimentAPI(spark, tiny_model, predictions_path=store)
+    server, _ = api.start_background()
+    port = server.server_address[1]
+    clients, calls = 4, 25
+    failures: list = []
+
+    def client(c: int) -> None:
+        for i in range(calls):
+            code, out = _call(port, "POST", "/predict/", {"message": f"great happy {c}-{i}"})
+            if (code, out) != (200, {"sentiment": POSITIVE}):
+                failures.append((c, i, code, out))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(c,)) for c in range(clients)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        code, out = _call(port, "POST", "/predictions/?limit=10")
+    finally:
+        sys.setswitchinterval(switch)
+        server.shutdown()
+    assert failures == [] and api.audit_failures == 0
+    stored = [r["message"] for r in spark.read.parquet(store).collect()]
+    assert len(stored) == clients * calls
+    assert set(stored) == {f"great happy {c}-{i}" for c in range(clients) for i in range(calls)}
+    assert code == 200
+    ts = [p["timestamp"] for p in out["predictions"]]
+    assert len(ts) == 10 and ts == sorted(ts, reverse=True)

@@ -10,9 +10,15 @@ batches; the watermark computed from batch N gates batch N+1.
 from __future__ import annotations
 
 import os
+import types
+import uuid
 from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from bigdata_lab4_spark.engine import (
     create_predictions_table,
@@ -163,6 +169,88 @@ def test_predictions_insert_and_topk_roundtrip(spark, tmp_path):
     assert len(one) == 1 and one[0]["message"] == rows[0]["message"]
     with pytest.raises(ValueError):
         top_k_predictions(spark, limit=-1, path=path)
+
+
+def _visible_parquet(path: str) -> list[str]:
+    return [n for n in os.listdir(path) if n.endswith(".parquet") and n[0] not in "._"]
+
+
+def test_insert_into_missing_path_writes_one_file(spark, tmp_path):
+    # no create_predictions_table first; the parent directory is missing too
+    path = str(tmp_path / "store" / "predictions")
+    insert_prediction(spark, "great movie", "Positive sentiment", path)
+    assert len(_visible_parquet(path)) == 1
+    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    assert [(r["message"], r["prediction"]) for r in rows] == [("great movie", "Positive sentiment")]
+
+
+def test_store_without_py4j_bridge_uses_local_path(spark, tmp_path):
+    # a Spark Connect session has no ``_jvm``; create and insert then
+    # write to the driver-local path
+    path = str(tmp_path / "predictions")
+    connect_like = types.SimpleNamespace()
+    create_predictions_table(connect_like, path)
+    create_predictions_table(connect_like, path)
+    insert_prediction(connect_like, "great movie", "Positive sentiment", path)
+    assert len(_visible_parquet(path)) == 2  # one empty table file, one row
+    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    assert [r["message"] for r in rows] == ["great movie"]
+
+
+def test_insert_prediction_runs_no_spark_job(spark, tmp_path):
+    sc = spark.sparkContext
+    group = f"insert-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        insert_prediction(spark, "great movie", "Positive sentiment", str(tmp_path / "p"))
+        spark.range(1).collect()  # exactly one job, so the group is seen
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_legacy_spark_written_rows_read_with_new_inserts(spark, tmp_path):
+    """A store holding a row appended by a Spark write job (INT96
+    timestamp) reads back complete and newest first once rows written
+    by ``insert_prediction`` (INT64 microseconds, UTC) join it."""
+    path = str(tmp_path / "predictions")
+    spark.createDataFrame([("old row", "Negative sentiment")], ["message", "prediction"]).select(
+        F.current_timestamp().alias("timestamp"), "message", "prediction"
+    ).write.mode("append").parquet(path)
+    legacy = _visible_parquet(path)
+    assert legacy and all(
+        pq.ParquetFile(os.path.join(path, n)).schema.column(0).physical_type == "INT96"
+        for n in legacy
+    )
+    insert_prediction(spark, "new row 1", "Positive sentiment", path)
+    insert_prediction(spark, "new row 2", "Positive sentiment", path)
+    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    assert [r["message"] for r in rows] == ["new row 2", "new row 1", "old row"]
+
+
+def test_hidden_in_flight_file_is_not_read(spark, tmp_path):
+    """A half-written file keeps its hidden ``.part-*`` name until it
+    is renamed; readers skip it even when it is not valid parquet."""
+    path = str(tmp_path / "predictions")
+    insert_prediction(spark, "great movie", "Positive sentiment", path)
+    with open(os.path.join(path, f".part-0-{uuid.uuid4().hex}.parquet"), "wb") as f:
+        f.write(b"PAR1 truncated")
+    rows = top_k_predictions(spark, limit=10, path=path).collect()
+    assert [r["message"] for r in rows] == ["great movie"]
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    message=st.text(st.characters(codec="utf-8"), min_size=1),
+    prediction=st.text(st.characters(codec="utf-8"), min_size=1),
+)
+def test_insert_prediction_roundtrips_any_unicode(spark, tmp_path, message, prediction):
+    path = str(tmp_path / uuid.uuid4().hex)
+    insert_prediction(spark, message, prediction, path)
+    (row,) = top_k_predictions(spark, limit=10, path=path).collect()
+    assert row["message"].encode("utf-8") == message.encode("utf-8")
+    assert row["prediction"].encode("utf-8") == prediction.encode("utf-8")
 
 
 # -- streaming stateful dedup (T5 streaming form) ----------------------
