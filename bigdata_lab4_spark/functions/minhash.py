@@ -66,7 +66,16 @@ FINGERPRINT_SCHEMA = "struct<idx: array<int>, sig: array<bigint>>"
 def _make_kernel(coeffs, prime, num_features):
     """Build the (token → index, tokens → fingerprint) kernel. Nested
     defs only — cloudpickle cannot resolve them as module attributes, so
-    any closure referencing them is shipped by value."""
+    any closure referencing them is shipped by value.
+
+    The signature fold computes ``(1 + idx) * a + b`` in int64 with
+    ``1 + idx <= num_features``, so it is exact only while
+    ``num_features * max(a) + max(b) < 2**63``; coefficients that break
+    the bound raise instead of wrapping silently."""
+    if num_features * max(a for a, _ in coeffs) + max(b for _, b in coeffs) >= 1 << 63:
+        raise OverflowError(
+            f"minhash fold overflows int64: num_features={num_features}, coeffs={coeffs!r}"
+        )
     mask32 = 0xFFFFFFFF
 
     def murmur3_32(data: bytes, seed: int = 42) -> int:
@@ -118,10 +127,10 @@ def _make_kernel(coeffs, prime, num_features):
         idxs = sorted(idx_set)
         # Vectorized min-fold (guide §4.2: vectorize inside the Python
         # boundary): 8 × |idxs| modular contributions as ONE int64
-        # matrix op instead of 8 Python generator folds. Exact — the
-        # largest intermediate (1 + 2^18) · a < 2^49 fits int64, so
-        # these are the same integers the scalar fold produced (pinned
-        # vs MinHashLSHModel.transform in tests/test_minhash_compat).
+        # matrix op instead of 8 Python generator folds. Exact under
+        # the int64 bound checked above, so these are the same integers
+        # the scalar fold produced (pinned vs MinHashLSHModel.transform
+        # in tests/test_minhash_compat).
         v = np.array(idxs, dtype=np.int64) + 1
         sig = ((v[:, None] * _coeff_a + _coeff_b) % prime).min(axis=0).tolist()
         return idxs, sig

@@ -20,6 +20,9 @@ baseline; the LSH bucketed variant is the ANN path.
 
 from __future__ import annotations
 
+import warnings
+
+from py4j.protocol import Py4JError
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -489,14 +492,22 @@ def _brp_unit_vectors(model):
     """The fitted ``BucketedRandomProjectionLSHModel``'s seeded random
     unit vectors as plain Python lists (numHashTables × dim doubles —
     bounded at any corpus size), or ``None`` when the session exposes
-    no py4j bridge (Spark Connect). ``randUnitVectors`` is a
-    ``private[ml]`` accessor, which compiles to a public method, so the
-    classic-session bridge can call it; the ``None`` path keeps the
-    ``model.transform`` pipeline (same rows — tests/test_llm.py)."""
+    no py4j bridge (Spark Connect: no ``_java_obj``) or the bridge call
+    fails. ``randUnitVectors`` is a ``private[ml]`` accessor, which
+    compiles to a public method, so the classic-session bridge can call
+    it; the ``None`` path keeps the ``model.transform`` pipeline (same
+    rows — tests/test_llm.py), which is slower, so falling back warns.
+    Any other error propagates."""
     try:
         juvs = model._java_obj.randUnitVectors()
         return [list(juvs[i].toArray()) for i in range(len(juvs))]
-    except Exception:
+    except (Py4JError, AttributeError) as exc:
+        warnings.warn(
+            f"l03b: BRP unit vectors unavailable ({type(exc).__name__}: {exc}); "
+            "falling back to model.transform",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return None
 
 

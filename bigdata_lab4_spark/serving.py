@@ -22,19 +22,22 @@ The reference's ``/vault-status/`` route reports its secrets
 backend; there is no secrets backend here (configuration is plain
 constructor arguments), so the route is intentionally absent.
 
-Scale notes: serving is a *driver-side* concern, and ``/predict``
-runs no Spark job. ``predict_one`` scores against the
+Scale notes: serving is a *driver-side* concern, and no serving
+route runs a Spark job. ``predict_one`` scores against the
 broadcast-sized local parameter copy (O(classes × max_features)
 floats), so scoring is microseconds of Python, not a cluster
 round-trip. The audit trail mirrors the reference's per-request
 ClickHouse insert as one driver-side parquet file write per request
 (:func:`~bigdata_lab4_spark.engine.insert_prediction`), tens of
-milliseconds. A high-QPS deployment batches its appends through the
-micro-batching streaming sink (:mod:`bigdata_lab4_spark.streaming`)
-instead. A failed audit write still answers 200, as in the
-reference, but is logged as a warning and counted in
-``SentimentAPI.audit_failures``. Only ``/predictions`` runs a Spark
-job: a top-k read of the store.
+milliseconds. ``/predictions`` reads the newest files of the store
+on the driver (:func:`~bigdata_lab4_spark.engine.latest_predictions`),
+as the reference's ``ORDER BY timestamp`` MergeTree reads only its
+newest parts; a store that does not exist yet answers an empty list,
+as the reference's table created at startup does. A high-QPS
+deployment batches its appends through the micro-batching streaming
+sink (:mod:`bigdata_lab4_spark.streaming`) instead. A failed audit
+write still answers 200, as in the reference, but is logged as a
+warning and counted in ``SentimentAPI.audit_failures``.
 """
 
 from __future__ import annotations
@@ -45,9 +48,11 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql.types import TimestampType
 
-from bigdata_lab4_spark.engine import insert_prediction, top_k_predictions
+from bigdata_lab4_spark.engine import insert_prediction, latest_predictions
 
 logger = logging.getLogger(__name__)
 
@@ -100,16 +105,21 @@ class SentimentAPI:
     def predictions(self, limit: int = 10) -> list[dict]:
         if self.predictions_path is None:
             raise LookupError("predictions store not configured")
-        rows = top_k_predictions(
-            self.spark, limit=limit, path=self.predictions_path
-        ).collect()
+        rows = latest_predictions(self.predictions_path, limit)
+        # the conversion Spark's ``collect`` applies to a timestamp:
+        # µs since the epoch → naive local datetime
+        to_datetime = TimestampType().fromInternal
         return [
             {
-                "timestamp": r["timestamp"].isoformat(),
-                "message": r["message"],
-                "prediction": r["prediction"],
+                "timestamp": to_datetime(ts).isoformat(),
+                "message": message,
+                "prediction": prediction,
             }
-            for r in rows
+            for ts, message, prediction in zip(
+                rows.column("timestamp").cast(pa.int64()).to_pylist(),
+                rows.column("message").to_pylist(),
+                rows.column("prediction").to_pylist(),
+            )
         ]
 
     def health(self) -> dict:

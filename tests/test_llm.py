@@ -10,8 +10,12 @@ seeded (seed=42), so the measured recalls are deterministic.
 
 from __future__ import annotations
 
-import pytest
+import types
 
+import pytest
+from py4j.protocol import Py4JError
+
+from bigdata_lab4_spark.queries import llm
 from bigdata_lab4_spark.queries.llm import minhash_lsh_pairs
 from bigdata_lab4_spark.registry import all_queries
 
@@ -74,6 +78,34 @@ def test_ann_lsh_recall_at_10_vs_exact_knn(spark, queries):
         approx10 = set(ann.get(qid, [])[:10])
         recalls.append(len(set(top10) & approx10) / len(top10))
     assert sum(recalls) / len(recalls) >= 0.8
+
+
+def _raising(exc):
+    def call():
+        raise exc
+
+    return call
+
+
+@pytest.mark.parametrize(
+    "model",
+    [
+        types.SimpleNamespace(),  # Spark Connect: no py4j-backed ``_java_obj``
+        types.SimpleNamespace(_java_obj=types.SimpleNamespace(randUnitVectors=_raising(Py4JError("gone")))),
+    ],
+    ids=["no_java_obj", "py4j_error"],
+)
+def test_brp_unit_vectors_fallback_warns(model):
+    """The l03b fallback to ``model.transform`` is slower, so taking it
+    warns instead of switching silently."""
+    with pytest.warns(RuntimeWarning, match="falling back to model.transform"):
+        assert llm._brp_unit_vectors(model) is None
+
+
+def test_brp_unit_vectors_other_errors_propagate():
+    model = types.SimpleNamespace(_java_obj=types.SimpleNamespace(randUnitVectors=_raising(ValueError("bad"))))
+    with pytest.raises(ValueError, match="bad"):
+        llm._brp_unit_vectors(model)
 
 
 def test_ann_lsh_native_hashes_match_model_transform(spark, queries, monkeypatch):

@@ -15,12 +15,14 @@ each layer of that claim:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_lab4_spark.functions.minhash import (
     MINHASH_COEFFS,
     MINHASH_PRIME,
     NUM_FEATURES,
+    _make_kernel,
     doc_fingerprint,
     hashing_tf_index,
 )
@@ -73,6 +75,18 @@ def test_signature_formula_constants():
     e = hashing_tf_index("hello")
     assert idxs == [e]
     assert sig == [((1 + e) * a + b) % MINHASH_PRIME for a, b in MINHASH_COEFFS]
+
+
+def test_kernel_rejects_coefficients_that_overflow_int64():
+    """The int64 min-fold is exact only while the largest intermediate
+    ``num_features * a + b`` fits; one past the bound raises."""
+    a = ((1 << 63) - 1) // NUM_FEATURES
+    _, fingerprint = _make_kernel(((a, (1 << 63) - 1 - NUM_FEATURES * a),), MINHASH_PRIME, NUM_FEATURES)
+    assert len(fingerprint(["hello"], {})[1]) == 1
+    with pytest.raises(OverflowError):
+        _make_kernel(((a, (1 << 63) - NUM_FEATURES * a),), MINHASH_PRIME, NUM_FEATURES)
+    with pytest.raises(OverflowError):
+        _make_kernel(((a + 1, 0),), MINHASH_PRIME, NUM_FEATURES)
 
 
 def test_pairs_match_approx_similarity_join(spark):

@@ -6,12 +6,23 @@ from __future__ import annotations
 
 import json
 import logging
+import os
 import sys
 import threading
 import urllib.request
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+from bigdata_lab4_spark.engine import (
+    _ARROW_PREDICTIONS_SCHEMA,
+    PREDICTIONS_SCHEMA,
+    _write_predictions_file,
+    insert_prediction,
+)
 from bigdata_lab4_spark.ml.pipeline import (
     NEGATIVE,
     POSITIVE,
@@ -181,3 +192,70 @@ def test_concurrent_predicts_lose_no_audit_rows(spark, tiny_model, tmp_path):
     assert code == 200
     ts = [p["timestamp"] for p in out["predictions"]]
     assert len(ts) == 10 and ts == sorted(ts, reverse=True)
+
+
+def test_predictions_before_first_predict_is_empty_not_500(spark, tiny_model, tmp_path):
+    """A store no ``/predict`` has written yet reads as an empty table,
+    as the reference's table created at startup does; a store path that
+    cannot be read still answers 500."""
+    api = SentimentAPI(spark, tiny_model, predictions_path=str(tmp_path / "not" / "yet"))
+    not_a_dir = tmp_path / "preds"
+    not_a_dir.write_text("a regular file, not a parquet directory")
+    broken = SentimentAPI(spark, tiny_model, predictions_path=str(not_a_dir))
+    servers = [api.start_background()[0], broken.start_background()[0]]
+    try:
+        code, out = _call(servers[0].server_address[1], "POST", "/predictions/?limit=10")
+        assert code == 200 and out == {"predictions": []}
+        code, out = _call(servers[1].server_address[1], "POST", "/predictions/?limit=10")
+        assert code == 500 and out == {"detail": "Failed to fetch predictions"}
+    finally:
+        for server in servers:
+            server.shutdown()
+
+
+def test_predictions_json_matches_spark_collected_rows(spark, tiny_model, tmp_path):
+    """The ``/predictions`` payload is string-for-string the formatting
+    of Spark-collected rows (``r["timestamp"].isoformat()``), on a store
+    holding a legacy Spark-written (INT96) row, driver-written rows and
+    rows whose microsecond is 0 (``isoformat`` then drops the fraction)."""
+    path = str(tmp_path / "preds")
+    spark.createDataFrame(
+        [
+            (datetime(2026, 1, 1, 12, 0, 0, tzinfo=timezone.utc), "legacy whole second", NEGATIVE),
+            (datetime(2026, 1, 1, 12, 0, 0, 250, tzinfo=timezone.utc), "legacy µs", NEGATIVE),
+        ],
+        schema=PREDICTIONS_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(path)
+    _write_predictions_file(
+        path,
+        pa.Table.from_pylist(
+            [{"timestamp": datetime(2026, 1, 2, 8, 30, tzinfo=timezone.utc), "message": "whole second",
+              "prediction": POSITIVE}],
+            schema=_ARROW_PREDICTIONS_SCHEMA,
+        ),
+    )
+    insert_prediction(spark, "now", POSITIVE, path)
+    rows = (
+        spark.read.schema(PREDICTIONS_SCHEMA).parquet(path).orderBy(F.desc("timestamp")).limit(10).collect()
+    )
+    want = json.dumps(
+        {
+            "predictions": [
+                {"timestamp": r["timestamp"].isoformat(), "message": r["message"], "prediction": r["prediction"]}
+                for r in rows
+            ]
+        }
+    )
+    api = SentimentAPI(spark, tiny_model, predictions_path=path)
+    assert json.dumps({"predictions": api.predictions(10)}) == want
+    server, _ = api.start_background()
+    try:
+        with urllib.request.urlopen(
+            urllib.request.Request(f"http://127.0.0.1:{server.server_address[1]}/predictions/?limit=10", method="POST")
+        ) as resp:
+            assert resp.read().decode() == want
+    finally:
+        server.shutdown()
+    assert len(rows) == 4 and sum(r["timestamp"].microsecond == 0 for r in rows) == 2
+    legacy = [n for n in os.listdir(path) if n.endswith(".zstd.parquet")]
+    assert legacy and pq.ParquetFile(os.path.join(path, legacy[0])).schema.column(0).physical_type == "INT96"

@@ -12,8 +12,10 @@ from __future__ import annotations
 import os
 import types
 import uuid
-from datetime import datetime, timezone
+from collections import Counter
+from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -21,10 +23,15 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdata_lab4_spark.engine import (
+    _ARROW_PREDICTIONS_SCHEMA,
+    PREDICTIONS_SCHEMA,
+    _write_predictions_file,
     create_predictions_table,
     insert_prediction,
+    latest_predictions,
     top_k_predictions,
 )
+from bigdata_lab4_spark.serving import SentimentAPI
 from bigdata_lab4_spark.streaming import (
     read_events_stream,
     run_available_now,
@@ -251,6 +258,110 @@ def test_insert_prediction_roundtrips_any_unicode(spark, tmp_path, message, pred
     (row,) = top_k_predictions(spark, limit=10, path=path).collect()
     assert row["message"].encode("utf-8") == message.encode("utf-8")
     assert row["prediction"].encode("utf-8") == prediction.encode("utf-8")
+
+
+def _full_scan_top_k(spark, path: str, limit: int):
+    return spark.read.schema(PREDICTIONS_SCHEMA).parquet(path).orderBy(F.desc("timestamp")).limit(limit)
+
+
+def _write_legacy_rows(spark, path: str, rows) -> None:
+    """Append ``rows`` through a Spark write job: INT96 timestamps and
+    Spark's own file names, which carry no timestamp bound."""
+    spark.createDataFrame(rows, schema=PREDICTIONS_SCHEMA).write.mode("append").parquet(path)
+
+
+_store_ops = st.lists(
+    st.one_of(
+        st.tuples(st.just("insert"), st.sampled_from(["a", "b", "c"])),
+        st.tuples(st.just("empty"), st.none()),
+        # multi-row files: offsets in ms around the write time, so rows
+        # interleave with other files' rows; repeats make ties
+        st.tuples(st.just("legacy"), st.lists(st.integers(-50, 50), min_size=1, max_size=4)),
+        st.tuples(st.just("batch"), st.lists(st.integers(-50, 50), min_size=1, max_size=4)),
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@settings(max_examples=30, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(ops=_store_ops, limit=st.integers(0, 15))
+def test_top_k_matches_full_scan_on_random_stores(spark, tmp_path, ops, limit):
+    """On stores mixing inserts, empty-table files, multi-row
+    driver-written files and legacy multi-row Spark-written files, the
+    newest-files read returns the same rows as a Spark full scan. Rows
+    tied at the cut timestamp may be any of the store's rows with that
+    timestamp, as in the scan."""
+    path = str(tmp_path / uuid.uuid4().hex)
+    for n, (kind, arg) in enumerate(ops):
+        if kind == "insert":
+            insert_prediction(spark, f"{arg}{n}", "Positive sentiment", path)
+        elif kind == "empty":
+            _write_predictions_file(path, _ARROW_PREDICTIONS_SCHEMA.empty_table())
+        else:
+            now = datetime.now(timezone.utc)
+            rows = [(now + timedelta(milliseconds=ms), f"{kind}{n}-{i}", "Negative sentiment")
+                    for i, ms in enumerate(arg)]
+            if kind == "legacy":
+                _write_legacy_rows(spark, path, rows)
+            else:  # one driver-written file, named after its newest row
+                _write_predictions_file(
+                    path,
+                    pa.Table.from_pylist([dict(zip(PREDICTIONS_SCHEMA.names, r)) for r in rows],
+                                         schema=_ARROW_PREDICTIONS_SCHEMA),
+                )
+    got = [tuple(r) for r in top_k_predictions(spark, limit=limit, path=path).collect()]
+    want = [tuple(r) for r in _full_scan_top_k(spark, path, limit).collect()]
+    assert [r[0] for r in got] == [r[0] for r in want]
+    if not got:
+        return
+    cut = got[-1][0]
+    assert Counter(r for r in got if r[0] != cut) == Counter(r for r in want if r[0] != cut)
+    at_cut = Counter(tuple(r) for r in _full_scan_top_k(spark, path, 10**6).collect() if r[0] == cut)
+    assert Counter(r for r in got if r[0] == cut) <= at_cut
+
+
+def test_top_k_opens_only_the_newest_files(spark, tmp_path, monkeypatch):
+    """On a 200-insert store, ``limit=10`` opens at most 10 of the
+    insert files, plus every file without a timestamp bound."""
+    path = str(tmp_path / "predictions")
+    _write_legacy_rows(spark, path, [(datetime(2026, 1, 1, tzinfo=timezone.utc), "legacy", "Negative sentiment")])
+    unbounded = set(_visible_parquet(path))
+    for i in range(200):
+        insert_prediction(spark, f"row {i}", "Positive sentiment", path)
+    opened = []
+    read_table = pq.read_table
+
+    def counting_read_table(source, *args, **kwargs):
+        opened.append(os.path.basename(source))
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting_read_table)
+    rows = latest_predictions(path, 10)
+    monkeypatch.undo()
+    assert rows.column("message").to_pylist() == [f"row {i}" for i in range(199, 189, -1)]
+    assert unbounded <= set(opened)
+    assert len(set(opened) - unbounded) <= 10 and len(opened) == len(set(opened))
+    want = [tuple(r) for r in _full_scan_top_k(spark, path, 10).collect()]
+    assert [tuple(r) for r in top_k_predictions(spark, limit=10, path=path).collect()] == want
+
+
+def test_serving_predictions_and_top_k_run_no_spark_job(spark, tmp_path):
+    path = str(tmp_path / "p")
+    for i in range(3):
+        insert_prediction(spark, f"row {i}", "Positive sentiment", path)
+    sc = spark.sparkContext
+    group = f"predictions-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        served = SentimentAPI(spark, model=None, predictions_path=path).predictions(2)
+        collected = top_k_predictions(spark, limit=2, path=path).collect()
+        spark.range(1).collect()  # exactly one job, so the group is seen
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert [p["message"] for p in served] == [r["message"] for r in collected] == ["row 2", "row 1"]
 
 
 # -- streaming stateful dedup (T5 streaming form) ----------------------
